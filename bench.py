@@ -542,7 +542,8 @@ def encoded_topk_stage(spark, out: str) -> dict:
 
         rdr = FhirflatBatchReader({"path": out}, None)
         rdr.pushFilters([GreaterThanOrEqual(("repo",), tau)])
-        parts_read = len(list(rdr.partitions()))
+        parts_read = len({pid for t in rdr.partitions()
+                          for pid, _, _ in t.pieces})
     st = {
         "k": k,
         "tau_derived": tau is not None,

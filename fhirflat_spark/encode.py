@@ -485,6 +485,17 @@ def _bq(c: str):  # flat tables may carry dotted names (period.start)
 SALT_STATS_CAP = int(os.environ.get("SPARK_GRAFT_SALT_STATS_CAP", "4096"))
 
 
+def _salt_stats_cap() -> int:
+    """``SALT_STATS_CAP``, checked where it is used: a cap below 1 would
+    truncate every key list to [] and collapse placement onto one
+    partition (the empty-input plan) without a word."""
+    if SALT_STATS_CAP < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_SALT_STATS_CAP must be >= 1 (got {SALT_STATS_CAP})"
+        )
+    return SALT_STATS_CAP
+
+
 def _salted_prelude(df: DataFrame, rows_per_bucket: int,
                     num_partitions: int | None, salt_col: str | None,
                     key_counts: list[tuple] | None,
@@ -527,7 +538,7 @@ def _salted_prelude(df: DataFrame, rows_per_bucket: int,
     # remainder mass (equivalent rows) that sizes the "o:" fallback bucket.
     capped = False
     rest_equiv = 0
-    cap = SALT_STATS_CAP
+    cap = _salt_stats_cap()
     if key_counts is None and weight_col is not None:
         # byte-weighted placement: bucket allocation follows each key's
         # PAYLOAD BYTES, not its row count. Row counts under-provision a
@@ -1496,13 +1507,13 @@ def encode_table(
     stage 2 renumbers chunk_seq deterministically, CONSOLIDATES runs of
     small chunklets (decode+re-encode below batch_rows//4 rows — keeps
     footprint stable on scattered inputs), and commits the fragments.
-    Since r6 this IS what ``shuffle=True`` runs (the golden manifest
-    re-pinned to it as one deliberate format change): with the r6
-    transit chunklets (slices below the consolidation threshold ship as
-    lz4-framed whole-slice Arrow IPC instead of being fully encoded
-    twice) and the data-driven stage-2 task count (~2 per core instead
-    of one per target partition), it measured faster than the row
-    exchange at EVERY level (1M rows, min-of-3, same host: local[1]
+    Since r6 this IS what ``shuffle=True`` runs (the golden manifest was
+    not re-pinned: at its config both exchanges give the same dataset
+    sha): with the r6 transit chunklets (slices below the consolidation
+    threshold ship as lz4-framed whole-slice Arrow IPC instead of being
+    fully encoded twice) and the data-driven stage-2 task count (~2 per
+    core instead of one per target partition), it measured faster than
+    the row exchange at EVERY level (1M rows, min-of-3, same host: local[1]
     17.2s vs 28.1, local[4] 5.1 vs 6.5, local[32] 2.4 vs 4.8) at
     footprint parity, and ships ~0.3-0.5x of raw on the wire vs the
     row exchange's 1.0x — the 100-TB lever. Layout is a pure function
@@ -2060,11 +2071,12 @@ def append_table(
         # top-``SALT_STATS_CAP`` heaviest delta keys exact (deterministic
         # order); tail keys place via the planner's "o:" fallback bucket
         # and the persisted delta stats stay O(cap), not O(#keys)
+        cap = _salt_stats_cap()
         rows = (df.groupBy("repo").count()
                 .orderBy(F.desc("count"), F.col("`repo`"))
-                .limit(SALT_STATS_CAP + 1).collect())
-        if len(rows) > SALT_STATS_CAP:
-            rows = rows[:SALT_STATS_CAP]
+                .limit(cap + 1).collect())
+        if len(rows) > cap:
+            rows = rows[:cap]
         delta_stats = [(r[0], r["count"]) for r in rows]
         key_counts = delta_stats
     res = encode_table(

@@ -51,6 +51,11 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _covered_part_ids(rdr) -> set[int]:
+    """Part ids the reader's planned tasks read."""
+    return {pid for t in rdr.partitions() for pid, _, _ in t.pieces}
+
+
 def test_batch_read_matches_decode_table(spark, ds_dir):
     via_source = spark.read.format("fhirflat").option("path", ds_dir).load()
     via_decode = decode_table(spark, ds_dir)
@@ -196,10 +201,10 @@ def test_stream_reader_offsets_and_empty_window(spark, ds_dir):
     assert rdr.initialOffset() == {"snapshot": 0}
     latest = rdr.latestOffset()
     assert latest == {"snapshot": 3}
-    # delete-only window (2 -> 3): no new parts, sentinel partition,
+    # delete-only window (2 -> 3): no new parts, one empty partition,
     # zero rows
     parts = rdr.partitions({"snapshot": 2}, {"snapshot": 3})
-    assert len(parts) == 1 and parts[0].part_id == -1
+    assert len(parts) == 1 and parts[0].pieces == ()
     assert list(rdr.read(parts[0])) == []
     # append window (1 -> 2) carries exactly the upsert's rows
     parts12 = rdr.partitions({"snapshot": 1}, {"snapshot": 2})
@@ -544,11 +549,12 @@ def test_pushdown_null_checks_prune_partitions(spark, tmp_path):
     register(spark)
 
     base = FhirflatBatchReader({"path": out}, None)
-    n_all = len(base.partitions())
+    all_ids = _covered_part_ids(base)
 
     nn = FhirflatBatchReader({"path": out}, None)
     nn.pushFilters([IsNotNull(("opt",))])
-    assert len(nn.partitions()) < n_all  # all-null partitions pruned
+    kept = _covered_part_ids(nn)
+    assert kept and kept < all_ids  # all-null partitions pruned
     got_nn = sorted(
         v.as_py() for p in nn.partitions() for b in nn.read(p)
         for v in b.column(0)
@@ -557,7 +563,8 @@ def test_pushdown_null_checks_prune_partitions(spark, tmp_path):
 
     nu = FhirflatBatchReader({"path": out}, None)
     nu.pushFilters([IsNull(("opt",))])
-    assert len(nu.partitions()) < n_all  # fully-valued partitions pruned
+    kept = _covered_part_ids(nu)
+    assert kept and kept < all_ids  # fully-valued partitions pruned
     got_nu = sorted(
         v.as_py() for p in nu.partitions() for b in nu.read(p)
         for v in b.column(0)
@@ -647,3 +654,81 @@ def test_read_parts_arrow_matches_decode_and_refuses_deletes(
     delete_rows(spark, out, "doc_id", [3])
     with pytest.raises(ValueError, match="delete"):
         read_parts_arrow(out, pids, ["doc_id"])
+
+
+def test_small_partitions_pack_into_few_tasks(spark, tmp_path):
+    """Partitions far below one chunk pack into chunk-sized tasks: fewer
+    tasks than part ids, every live part id read exactly once in
+    ascending order, the same rows as decode_table (with and without an
+    active delete, and under time travel), and a partition wider than
+    ``split_chunks`` chunks still splits into chunk-seq ranges."""
+    from fhirflat_spark import fsio
+
+    out = str(tmp_path / "packed")
+    df = spark.range(0, 3000).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("k"), (F.col("id") % 37).cast("string")).alias("k"),
+    )
+    encode_table(df, out, rows_per_bucket=100)
+    # one wide partition: 640 rows in 64-row chunks
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "64")
+    try:
+        append_table(
+            spark.range(3000, 3640).select(
+                F.col("id").alias("doc_id"), F.lit("wide").alias("k")
+            ),
+            out, rows_per_bucket=10_000, num_partitions=1,
+        )
+    finally:
+        spark.conf.set(conf, old)
+    register(spark)
+
+    def live_ids():
+        t = fsio.read_parquet(f"{out}/manifest", columns=["part_id", "status"])
+        return sorted(p for p, s in zip(t["part_id"].to_pylist(),
+                                        t["status"].to_pylist()) if s == "ok")
+
+    def planned(opts):
+        return FhirflatBatchReader(dict(opts, path=out), None).partitions()
+
+    def source(**opts):
+        r = spark.read.format("fhirflat").option("path", out)
+        for k, v in opts.items():
+            r = r.option(k, v)
+        return r.load()
+
+    ids = live_ids()
+    parts = planned({"split_chunks": "0"})  # 0 = never split
+    assert len(parts) < len(ids)
+    assert [pid for t in parts for pid, _, _ in t.pieces] == ids
+    assert all(lo is None for t in parts for _, lo, _ in t.pieces)
+    assert _rows(source()) == _rows(decode_table(spark, out))
+
+    # the wide partition still splits into seq ranges, one task each,
+    # and those tasks stay in part-id order between the packed ones
+    t = fsio.read_parquet(f"{out}/manifest", columns=["part_id", "n_chunks"])
+    n_chunks = dict(zip(t["part_id"].to_pylist(), t["n_chunks"].to_pylist()))
+    wide = max(ids, key=n_chunks.get)
+    assert n_chunks[wide] > 4
+    parts = planned({"split_chunks": "4"})
+    ranges = [t.pieces for t in parts if t.pieces[0][0] == wide]
+    assert ranges == [
+        ((wide, lo, min(lo + 4, n_chunks[wide])),)
+        for lo in range(0, n_chunks[wide], 4)
+    ]
+    order = [pid for t in parts for pid, _, _ in t.pieces]
+    assert order == sorted(order)
+    assert sorted(set(order)) == ids
+    assert _rows(source(split_chunks="4")) == _rows(decode_table(spark, out))
+
+    # merge-on-read delete, then time travel to before it
+    delete_rows(spark, out, "doc_id", [5, 1234, 3001])
+    after = _rows(source())
+    assert after == _rows(decode_table(spark, out))
+    assert len(after) == 3640 - 3
+    assert _rows(source(snapshot="1")) == _rows(
+        decode_table(spark, out, snapshot=1)
+    )
+    assert len(_rows(source(snapshot="1"))) == 3000

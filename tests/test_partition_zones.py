@@ -118,13 +118,16 @@ def test_datasource_partition_pruning(clustered_ds):
     from fhirflat_spark.sources.datasource import FhirflatBatchReader
 
     out, docs_unused = clustered_ds
+    def covered(parts):  # part ids the planned tasks read
+        return {pid for t in parts for pid, _, _ in t.pieces}
+
     rdr = FhirflatBatchReader({"path": out}, None)
-    n_all = len(rdr.partitions())
+    all_ids = covered(rdr.partitions())
     rdr.pushFilters(
         [GreaterThanOrEqual(("doc_id",), 100), LessThanOrEqual(("doc_id",), 300)]
     )
     pruned = rdr.partitions()
-    assert 0 < len(pruned) < n_all
+    assert covered(pruned) and covered(pruned) < all_ids
     ids = [
         v.as_py() for p in pruned for b in rdr.read(p) for v in b.column(0)
     ]

@@ -107,3 +107,20 @@ def test_append_delta_stats_capped(spark, tmp_path, monkeypatch):
     n0 = decode_table(spark, out).count()
     append_table(delta, out, rows_per_bucket=50)
     assert decode_table(spark, out).count() == n0 + delta.count()
+
+
+@pytest.mark.parametrize("cap", [0, -1])
+def test_cap_below_one_raises_where_read(spark, tmp_path, monkeypatch, cap):
+    """A cap < 1 would truncate every key list to [] and silently put the
+    whole table on one partition: both read sites refuse it by name."""
+    from fhirflat_spark.encode import append_table
+
+    df = _skew_df(spark, n_keys=6, heavy_rows=20, tail_rows=2)
+    out = str(tmp_path / "t")
+    encode_table(df, out, rows_per_bucket=50)
+    monkeypatch.setattr(enc, "SALT_STATS_CAP", cap)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_SALT_STATS_CAP"):
+        _salted_prelude(df, 50, None, "repo", None)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_SALT_STATS_CAP"):
+        append_table(df, out, rows_per_bucket=50)
+    assert decode_table(spark, out).count() == df.count()  # nothing committed
